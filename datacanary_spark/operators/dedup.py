@@ -56,21 +56,38 @@ HIGH_NIBBLES = frozenset("89abcdef")  # hex digits whose high bit is 1
 # ---------------------------------------------------------------------------
 
 def char_shingles(text_col: Column, k: int = 5, lowercase: bool = True) -> Column:
-    """Distinct character k-shingles of a document as array<string>.
+    """Distinct character k-shingles of a document as array<string>, in
+    first-occurrence order; null or empty text → [].
 
     Whitespace runs are collapsed to single spaces first so formatting
     differences don't break shingle identity.
+
+    The normalized text is bound ONCE as a lambda variable (the
+    transform-over-a-1-element-array trick of
+    ``text_analysis.winnow_fingerprints``), so the whitespace regex and
+    the lowercasing run once per doc, O(n). Higher-order-function
+    subtrees are left out of Spark's subexpression elimination: a
+    ``substring(norm, i, k)`` over the unbound ``norm`` subtree re-ran
+    the regex over the whole document at every position, O(n²) regex
+    work per doc. (Each ``substring`` still walks the UTF-8 bytes from
+    the start of the text to its position: a plain byte scan, the
+    remaining n² term.)
     """
     norm = F.regexp_replace(text_col, r"\s+", " ")
     if lowercase:
         norm = F.lower(norm)
-    n = F.length(norm)
-    shingles = F.when(
-        n >= k,
-        F.transform(F.sequence(F.lit(1), n - k + 1),
-                    lambda i: F.substring(norm, i, k)),
-    ).otherwise(F.when(n > 0, F.array(norm)).otherwise(F.array().cast("array<string>")))
-    return F.array_distinct(shingles)
+
+    def from_norm(t: Column) -> Column:
+        n = F.length(t)
+        shingles = F.when(
+            n >= k,
+            F.transform(F.sequence(F.lit(1), n - k + 1),
+                        lambda i: F.substring(t, i, k)),
+        ).otherwise(F.when(n > 0, F.array(t))
+                    .otherwise(F.array().cast("array<string>")))
+        return F.array_distinct(shingles)
+
+    return F.element_at(F.transform(F.array(norm), from_norm), 1)
 
 
 def minhash_signature(shingles: Column, n_hashes: int = 16,
@@ -246,6 +263,41 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id",
 # MinHash LSH near-dup candidates + Jaccard verify
 # ---------------------------------------------------------------------------
 
+def minhash_sig_rows(df: DataFrame, id_col: str = "doc_id",
+                     text_col: str = "text", k_shingle: int = 5,
+                     n_hashes: int = 16, hash_fn: str = "md5",
+                     spread: bool = True) -> DataFrame:
+    """(id, sig) MinHash signature rows, one per doc with non-empty text
+    — the single shingle + signature pass behind ``lsh_bucket_rows``,
+    ``decontaminate_minhash`` and ``plans.incremental.SignatureStore``.
+
+    Docs with no shingles (null or empty text) have no similarity
+    identity and get no row: at corpus scale they would all share ONE
+    empty band key, a degenerate bucket of every extraction failure.
+    They are dropped on ``length(text) > 0`` BEFORE the spread
+    (normalized text is empty iff the text is null or empty): a filter
+    on the shingle array itself is pushed below the round-robin
+    exchange by Catalyst, which shingles every doc twice, the first
+    time on one core. ``spread`` round-robins the rows across every
+    core before the shingle pass (no-op at real scale — see
+    plans/partitioning).
+    """
+    from datacanary_spark.plans.partitioning import spread_to_parallelism
+
+    d = df.where(F.length(F.col(text_col)) > 0)
+    if spread:
+        d = spread_to_parallelism(d)
+    # bind the shingle array to a column FIRST: the signature references
+    # it n_hashes times (one transform per seed) and would otherwise
+    # re-derive it per seed per row (same lambda-arity/CSE pitfall as
+    # functions/heuristics.with_text_stats — benchmarked ~10×)
+    d = d.select(F.col(id_col),
+                 char_shingles(F.col(text_col), k_shingle).alias("_sh"))
+    return d.select(F.col(id_col),
+                    minhash_signature(F.col("_sh"), n_hashes,
+                                      hash_fn).alias("sig"))
+
+
 def lsh_bucket_rows(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", k_shingle: int = 5,
                     n_hashes: int = 16, bands: int = 4,
@@ -253,30 +305,10 @@ def lsh_bucket_rows(df: DataFrame, id_col: str = "doc_id",
     """Explode each doc into one row per LSH band: (band_ix, band_key, id).
 
     band_key concatenates the band's slice of the MinHash signature;
-    docs sharing any full band land in the same bucket.
+    docs sharing any full band land in the same bucket. Null/empty-text
+    docs are excluded (see ``minhash_sig_rows``).
     """
-    from datacanary_spark.plans.partitioning import spread_to_parallelism
-
-    assert n_hashes % bands == 0, "bands must divide n_hashes"
-    # The 16-pass MinHash over the shingle array is the dominant map
-    # cost; make sure it runs on every core even when the input scanned
-    # as one row group (no-op at real scale — see plans/partitioning).
-    df = spread_to_parallelism(df)
-    # bind the shingle array to a column FIRST: the signature references
-    # it n_hashes times (one transform per seed) and would otherwise
-    # re-derive it per seed per row (same lambda-arity/CSE pitfall as
-    # functions/heuristics.with_text_stats — benchmarked ~10×)
-    d = df.select(F.col(id_col),
-                  char_shingles(F.col(text_col), k_shingle).alias("_sh"))
-    # Docs with no shingles (null or empty text) all hash to the SAME
-    # empty band key — at corpus scale that is one degenerate bucket of
-    # every extraction failure (the Jaccard verify would reject the
-    # pairs anyway, and max_bucket would drop the bucket, but there is
-    # no reason to build it). Unknown content has no similarity
-    # identity; exclude it from banding entirely.
-    d = d.where(F.size("_sh") > 0)
-    d = d.select(F.col(id_col),
-                 minhash_signature(F.col("_sh"), n_hashes, hash_fn).alias("sig"))
+    d = minhash_sig_rows(df, id_col, text_col, k_shingle, n_hashes, hash_fn)
     return band_rows_from_sig(d, id_col, "sig", n_hashes, bands)
 
 
@@ -689,25 +721,17 @@ def decontaminate_minhash(corpus: DataFrame, reference: DataFrame,
     """
     from datacanary_spark.plans.caching import maybe_persist
     from datacanary_spark.plans.incremental import sig_jaccard_estimate
-    from datacanary_spark.plans.partitioning import spread_to_parallelism
-
-    def sig_rows(df, idc, tc, spread):
-        d = spread_to_parallelism(df) if spread else df
-        d = d.select(F.col(idc),
-                     char_shingles(F.col(tc), k_shingle).alias("_sh"))
-        d = d.where(F.size("_sh") > 0)
-        return d.select(F.col(idc),
-                        minhash_signature(F.col("_sh"), n_hashes,
-                                          hash_fn).alias("sig"))
 
     c_sig = maybe_persist(
-        sig_rows(corpus.select(id_col, text_col), id_col, text_col, True),
+        minhash_sig_rows(corpus.select(id_col, text_col), id_col, text_col,
+                         k_shingle, n_hashes, hash_fn),
         persist)
     # the reference needs no id: DISTINCT signatures are its similarity
     # identity, and the signature itself rides the band rows as the
     # verify key (band_rows_from_sig carries whatever column is named)
-    r_sig = (sig_rows(reference.select(F.col(ref_text_col).alias("_rt")),
-                      "_rt", "_rt", False)
+    r_sig = (minhash_sig_rows(
+                 reference.select(F.col(ref_text_col).alias("_rt")),
+                 "_rt", "_rt", k_shingle, n_hashes, hash_fn, spread=False)
              .select(F.col("sig").alias("_ref_sig")).distinct())
     r_bands = band_rows_from_sig(r_sig, "_ref_sig", "_ref_sig",
                                  n_hashes, bands)
@@ -908,13 +932,14 @@ def remove_repeated_ngrams(df: DataFrame, id_col: str = "doc_id",
            .otherwise(F.array().cast("array<int>"))
     pairs = F.zip_with(F.col("_toks"), idx,
                        lambda t, i: F.struct(t.alias("t"), i.alias("i")))
+    # a doc with no removals has a null _rm (left join): exists → null
     kept = F.filter(
         pairs,
-        lambda p: ~F.exists(F.col("_rm"),
-                            lambda s: (p["i"] >= s) & (p["i"] < s + k)))
+        lambda p: ~F.coalesce(
+            F.exists(F.col("_rm"),
+                     lambda s: (p["i"] >= s) & (p["i"] < s + k)),
+            F.lit(False)))
     rebuilt = (base.join(rem_by_doc, id_col, "left")
-               .withColumn("_rm", F.coalesce(
-                   F.col("_rm"), F.array().cast("array<int>")))
                .select(F.col(id_col),
                        F.array_join(F.transform(kept, lambda p: p["t"]),
                                     " ").alias(text_col)))

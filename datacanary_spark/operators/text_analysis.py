@@ -320,12 +320,17 @@ def domain_suffixes_expr(host_col: Column) -> Column:
     com] — the UT1/adult-blocklist matching rule is "any suffix of the
     host appears in the list" (lists carry registrable domains, so the
     bare-TLD element never matches in practice). Linear build: one
-    split, one slice per label. Null host → null."""
-    parts = F.split(host_col, r"\.")
-    n = F.size(parts)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-        lambda i: F.concat_ws(".", F.slice(parts, i, n)))
+    split, bound once as a lambda variable (see winnow_fingerprints),
+    one slice per label. Null host → ``[""]``, which matches no
+    listed domain."""
+    def per_parts(parts: Column) -> Column:
+        n = F.size(parts)
+        return F.transform(
+            F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
+            lambda i: F.concat_ws(".", F.slice(parts, i, n)))
+
+    return F.element_at(
+        F.transform(F.array(F.split(host_col, r"\.")), per_parts), 1)
 
 
 def filter_blocked_domains(df, blocklist, url_col: str = "url",
@@ -802,19 +807,24 @@ def luhn_valid_expr(digits: Column) -> Column:
     scan speed; the byte-rewriting scrub stays in the pandas UDF.
     False for non-digit strings, nulls, and non-card lengths
     (< 13 or > 19); the fold only evaluates under the gate (CaseWhen
-    is lazy), so ANSI mode never sees a '' → int cast."""
-    rev = F.reverse(digits)
+    is lazy), so ANSI mode never sees a '' → int cast. The reversed
+    string is bound once as a lambda variable (see
+    winnow_fingerprints)."""
     n = F.length(digits)
-
-    def d(i):
-        return F.substring(rev, i, 1).cast("int")
 
     def dbl(v):
         return F.when(v >= 5, v * 2 - 9).otherwise(v * 2)
 
-    total = F.aggregate(
-        F.sequence(F.lit(1), n), F.lit(0),
-        lambda acc, i: acc + F.when(i % 2 == 0, dbl(d(i))).otherwise(d(i)))
+    def fold(rev: Column) -> Column:
+        def d(i):
+            return F.substring(rev, i, 1).cast("int")
+
+        return F.aggregate(
+            F.sequence(F.lit(1), F.length(rev)), F.lit(0),
+            lambda acc, i: acc + F.when(i % 2 == 0, dbl(d(i)))
+            .otherwise(d(i)))
+
+    total = F.element_at(F.transform(F.array(F.reverse(digits)), fold), 1)
     gate = digits.isNotNull() & (n >= 13) & (n <= 19) \
         & digits.rlike("^[0-9]+$")
     return F.when(gate, total % 10 == 0).otherwise(F.lit(False))

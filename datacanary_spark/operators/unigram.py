@@ -48,7 +48,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -77,20 +77,23 @@ def _substring_counts_from_wf(wf: DataFrame, max_len: int,
     """``substring_counts`` over an already-aggregated ``(w, c)`` table
     — lets ``train_unigram`` derive both of its heads from ONE
     ``word_freqs`` pass. The nested transform/flatten stays
-    whole-stage-codegen'd JVM work: the lambda binds ``w`` as a bound
-    ref (no unbound-subtree re-evaluation — see
-    ``heuristics.ngrams_expr``'s caveat).
+    whole-stage-codegen'd JVM work: ``w`` is a bound ref and its length
+    is bound once as a lambda variable (no unbound-subtree
+    re-evaluation — see ``heuristics.ngrams_expr``'s caveat).
     """
     if max_len < 1:
         raise ValueError(f"max_len must be >= 1, got {max_len}")
     w = F.col("w")
-    n = F.length(w)
+
     # starts i = 1..len; lengths L = 1..min(max_len, len-i+1)
-    subs = F.flatten(F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.transform(
-            F.sequence(F.lit(1), F.least(F.lit(max_len), n - i + 1)),
-            lambda L: w.substr(i, L))))
+    def per_len(n: Column) -> Column:
+        return F.flatten(F.transform(
+            F.sequence(F.lit(1), n),
+            lambda i: F.transform(
+                F.sequence(F.lit(1), F.least(F.lit(max_len), n - i + 1)),
+                lambda L: w.substr(i, L))))
+
+    subs = F.element_at(F.transform(F.array(F.length(w)), per_len), 1)
     rows = wf.select(*group_cols, F.col("c"),
                      F.explode(subs).alias("sub"))
     return (rows.groupBy(*group_cols, "sub")

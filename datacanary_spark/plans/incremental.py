@@ -70,11 +70,9 @@ from pyspark.sql import functions as F
 
 from datacanary_spark.operators.dedup import (
     band_rows_from_sig,
-    char_shingles,
-    minhash_signature,
+    minhash_sig_rows,
 )
 from datacanary_spark.plans.caching import CacheScope
-from datacanary_spark.plans.partitioning import spread_to_parallelism
 from datacanary_spark.sources.io import (
     path_exists,
     read_text,
@@ -539,14 +537,9 @@ class SignatureStore:
                         id_col, "left_semi").drop("_h"))
 
         # ---- near-dup tier (over exact survivors) ------------------------
-        sh = spread_to_parallelism(exact_surv).select(
-            F.col(id_col),
-            char_shingles(F.col(text_col), m["k_shingle"]).alias("_sh"))
-        banded = sh.where(F.size("_sh") > 0)
-        sigs = scope.persist(banded.select(
-            F.col(id_col),
-            minhash_signature(F.col("_sh"), m["n_hashes"],
-                              m["hash_fn"]).alias("sig")))
+        sigs = scope.persist(minhash_sig_rows(
+            exact_surv, id_col, text_col, m["k_shingle"], m["n_hashes"],
+            m["hash_fn"]))
 
         batch_bands = band_rows_from_sig(sigs, id_col, "sig",
                                          m["n_hashes"], m["bands"])

@@ -6,7 +6,9 @@ that matter at 100 TB: scan count, exchange (shuffle) count, join
 strategies, Python-evaluation nodes, pushed/partition filters, and
 whole-stage-codegen spans. Queries DESIGNED to contain a nested-loop
 stage (the exact all-pairs oracle twins) are annotated rather than
-flagged.
+flagged. Every lambda body of the optimized plan is also checked for
+captured subtrees (``plans.lambda_capture``): loop-invariant column
+work that a higher-order function re-runs per array element.
 
 Writes PLAN_AUDIT.md. Usage:
     python scripts/plan_audit.py [sf_dir]
@@ -80,6 +82,7 @@ def audit(name: str, plan: str) -> dict:
 
 
 def main() -> None:
+    from datacanary_spark.plans.lambda_capture import lambda_captures
     from datacanary_spark.session import get_spark
 
     import __spark_entry__ as entry
@@ -87,9 +90,11 @@ def main() -> None:
     spark = get_spark(app_name="plan_audit")
     rows, flags = [], []
     for name, fn in entry.queries().items():
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        a = audit(name, plan)
+        df = fn(spark, SF)
+        a = audit(name, df._jdf.queryExecution().executedPlan().toString())
+        a["captures"] = lambda_captures(df, "optimized")
         rows.append(a)
+        flags += [f"{name}: lambda captures {c}" for c in a["captures"]]
         if a["cartesian"]:
             flags.append(f"{name}: CartesianProduct")
         if a["bnlj"] and name not in EXPECTED_BNLJ | EXPECTED_SCALAR_BNLJ:
@@ -110,8 +115,8 @@ def main() -> None:
         "once, matching what actually executes.",
         "",
         "| query | scans | shuffles | broadcasts | BHJ | SMJ | BNLJ | "
-        "cartesian | python-eval | pushed filters |",
-        "|---|---|---|---|---|---|---|---|---|---|",
+        "cartesian | python-eval | pushed filters | lambda captures |",
+        "|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     for a in rows:
         note = (" (all-pairs by design)" if a["query"] in EXPECTED_BNLJ
@@ -121,7 +126,8 @@ def main() -> None:
             f"| {a['query']}{note} | {a['scans']} | {a['exchanges']} | "
             f"{a['broadcasts']} | "
             f"{a['bhj']} | {a['smj']} | {a['bnlj']} | {a['cartesian']} | "
-            f"{a['python']} | {'yes' if a['pushed'] else '—'} |")
+            f"{a['python']} | {'yes' if a['pushed'] else '—'} | "
+            f"{len(a['captures'])} |")
     lines += [
         "",
         "## Flags",
@@ -137,7 +143,8 @@ def main() -> None:
                      "the PQ compressed-scan) plus the single-row "
                      "scalar-broadcast cross join (global min attached "
                      "to per-group rows); Python evaluation appears "
-                     "only in the pandas-UDF operators (MAD UDAF).")
+                     "only in the pandas-UDF operators (MAD UDAF); no "
+                     "lambda body captures a column subtree.")
     with open("PLAN_AUDIT.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"{len(rows)} queries audited; {len(flags)} flags")

@@ -49,11 +49,50 @@ def docs_df(spark):
     return spark.createDataFrame(DOCS, "doc_id: long, text: string")
 
 
+# whitespace runs, null/short/exact-k text, supplementary-plane chars,
+# non-ASCII case folding and CJK: the edge set the ordered twin pins
+SHINGLE_EDGES = [
+    None, "", " ", "   ", "\t\t", "\r\n", " \t\r\n \t",
+    "a\t\tb\r\n\r\nc   d  \te", "ab", "abc", "abcde", "abcdefghi",
+    "Hi 😀😀 there 😀!", "𝔘𝔫𝔦𝔠𝔬𝔡𝔢  text 𝔘𝔫𝔦", "İstanbul İZMİR",
+    "Straße STRASSE straße", "ΣΑΣ ΟΔΟΣ σας", "数据清洗是训练大模型的重要步骤。数据清洗",
+    "MiXeD Case\tTABS\r\nand  CRLF",
+]
+
+
+def py_shingle_list(t: str | None, k: int = 5,
+                    lowercase: bool = True) -> list[str]:
+    """Ordered twin of char_shingles: distinct shingles in first-
+    occurrence order. Java's \\s is ASCII whitespace only."""
+    import re
+    if t is None:
+        return []
+    n = re.sub(r"[ \t\n\x0b\f\r]+", " ", t)
+    if lowercase:
+        n = n.lower()
+    if len(n) < k:
+        return [n] if n else []
+    return list(dict.fromkeys(n[i:i + k] for i in range(len(n) - k + 1)))
+
+
 def test_char_shingles_matches_python(spark, docs_df):
     rows = docs_df.select(
         "doc_id", dd.char_shingles(F.col("text")).alias("sh")).collect()
     for r in rows:
         assert set(r["sh"]) == py_shingles(DOCS[r["doc_id"]][1]), r["doc_id"]
+
+    cases = [(k, lc) for k in (3, 5, 9) for lc in (True, False)]
+    edges = spark.createDataFrame(list(enumerate(SHINGLE_EDGES)),
+                                  "i: int, text: string")
+    got = edges.select("i", *[
+        dd.char_shingles(F.col("text"), k, lc).alias(f"k{k}_{lc}")
+        for k, lc in cases]).collect()
+    assert len(got) == len(SHINGLE_EDGES)
+    for r in got:
+        t = SHINGLE_EDGES[r["i"]]
+        for k, lc in cases:
+            assert list(r[f"k{k}_{lc}"]) == py_shingle_list(t, k, lc), \
+                (t, k, lc)
 
 
 def test_minhash_signature_matches_python(spark, docs_df):

@@ -181,3 +181,98 @@ def test_no_complex_typed_output_columns_in_gated_queries(spark, queries):
             if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
                 bad.append((name, f"{f.name}: {f.dataType.simpleString()}"))
     assert not bad, f"complex-typed gate-incompatible output columns: {bad}"
+
+
+def test_hof_kernels_bind_captured_subtrees(spark):
+    """No higher-order-function kernel may capture loop-invariant work:
+    a lambda body subtree that reads a column but no lambda variable is
+    re-evaluated per array element (Spark leaves HOF subtrees out of
+    subexpression elimination) — the O(n²) char_shingles bug."""
+    from pyspark.sql import functions as F
+
+    from datacanary_spark.functions.heuristics import ngrams_expr, words_expr
+    from datacanary_spark.operators import bpe, unigram
+    from datacanary_spark.operators import dedup as dd
+    from datacanary_spark.operators import text_analysis as ta
+    from datacanary_spark.plans.lambda_capture import lambda_captures
+
+    df = spark.createDataFrame(
+        [("Some  Text here", "a.b.example.com", "word")],
+        "text: string, host: string, w: string")
+    text = F.col("text")
+    kernels = {
+        "char_shingles": df.select(dd.char_shingles(text)),
+        "minhash_signature": df.select(
+            dd.minhash_signature(F.split(text, " "))),
+        "minhash_sig_rows": dd.minhash_sig_rows(
+            df.select(F.lit(1).alias("doc_id"), "text")),
+        "simhash16": df.select(dd.simhash16(F.split(text, " "))),
+        "winnow_fingerprints": df.select(ta.winnow_fingerprints(text)),
+        "ngrams_expr": df.select(ngrams_expr(words_expr(text), 3)),
+        "bpe._char_pairs": df.select(bpe._char_pairs("w")),
+        "unigram substrings": unigram._substring_counts_from_wf(
+            df.select("w", F.lit(1).alias("c")), 4),
+        "domain_suffixes_expr": df.select(
+            ta.domain_suffixes_expr(F.col("host"))),
+    }
+    found = {name: caps for name, k in kernels.items()
+             if (caps := lambda_captures(k))}
+    assert not found, f"lambda bodies capture unbound subtrees: {found}"
+
+
+def _below_round_robin(plan: str) -> list[str]:
+    """Plan lines in the subtree of any RoundRobinPartitioning exchange."""
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    lines, out = plan.splitlines(), []
+    for i, ln in enumerate(lines):
+        if "RoundRobinPartitioning" in ln:
+            for below in lines[i + 1:]:
+                if depth(below) <= depth(ln):
+                    break
+                out.append(below)
+    return out
+
+
+def test_minhash_shingles_once_after_the_spread(spark, monkeypatch,
+                                                tmp_path):
+    """The shingle pass runs once per doc, after the round-robin spread
+    on every core: no shingle expression (its regexp normalization)
+    may be pushed below the exchange, where it would run a second time,
+    on the input's single partition."""
+    from datacanary_spark.operators.dedup import lsh_bucket_rows
+    from datacanary_spark.plans.caching import CacheScope
+    from datacanary_spark.plans.incremental import SignatureStore
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} some shared text") for i in range(12)]
+        + [(12, ""), (13, None)],
+        "doc_id: long, text: string").coalesce(1)
+    plans = [_executed(lsh_bucket_rows(docs))]
+
+    persist = CacheScope.persist
+
+    def record(scope, df, *args, **kw):
+        plans.append(_executed(df))
+        return persist(scope, df, *args, **kw)
+
+    monkeypatch.setattr(CacheScope, "persist", record)
+    # one shuffle partition: the exact survivors feeding the signature
+    # pass land in fewer partitions than cores, so ingest must spread
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        store = SignatureStore.create(spark, str(tmp_path / "store"))
+        assert store.ingest(docs, 0).count() > 0
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    spread = [p for p in plans if "RoundRobinPartitioning" in p]
+    assert len(spread) >= 2, "lsh_bucket_rows and ingest must both spread"
+    for p in spread:
+        assert "regexp_replace" in p  # the shingle pass is in this plan
+        below = [ln for ln in _below_round_robin(p)
+                 if "regexp_replace" in ln or "lambdafunction" in ln]
+        assert not below, "shingle work below the spread:\n" + \
+            "\n".join(below)
