@@ -23,6 +23,7 @@ from datacanary_spark.functions.heuristics import (
     SYMBOL_CLASS,
     FilterConfig,
     stat_cols,
+    stopword_count_expr,
     with_text_stats,
     words_expr,
 )
@@ -254,14 +255,12 @@ def textstats_by_lang(spark, sf_dir):
     """Tokenization + stopword stats as pure Column expressions (words
     array bound once per row via a staged project)."""
     d = _t(spark, sf_dir, "documents")
-    stops = F.array(*[F.lit(s) for s in sorted(ALL_STOPWORDS)])
     d = d.withColumn("_w", words_expr(F.col("text"))).select(
         "lang",
         F.size("_w").cast("long").alias("word_count"),
         F.aggregate("_w", F.lit(0).cast("long"),
                     lambda acc, w: acc + F.length(w)).cast("double").alias("word_chars"),
-        F.size(F.filter("_w", lambda w: F.array_contains(stops, w)))
-        .cast("long").alias("stop_count"),
+        stopword_count_expr(F.col("_w")).alias("stop_count"),
     )
     return d.groupBy("lang").agg(
         F.sum("word_count").alias("total_words"),

@@ -18,7 +18,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from datacanary_spark.functions.heuristics import words_expr
+from datacanary_spark.functions.heuristics import (
+    stopword_count_expr,
+    words_expr,
+)
 from datacanary_spark.sources.fixtures import LANGS, STOPWORDS
 
 # BPE-ish pre-tokenizer: ASCII alnum runs, or single non-alnum non-space
@@ -120,8 +123,7 @@ def token_count_bpe(text_col: Column) -> Column:
 
 def stopword_hits(words: Column, lang: str) -> Column:
     """How many tokens are stopwords of ``lang``."""
-    stops = F.array(*[F.lit(s) for s in sorted(STOPWORDS[lang])])
-    return F.size(F.filter(words, lambda w: F.array_contains(stops, w))).cast("long")
+    return stopword_count_expr(words, STOPWORDS[lang])
 
 
 def lang_guess_expr(text_col: Column) -> Column:

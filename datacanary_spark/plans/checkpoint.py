@@ -178,7 +178,6 @@ def run_filter_job(
                        "structure_rules": structure_rules,
                        "http_ok_only": http_ok_only}, f)
 
-    models_bc = broadcast_models(spark, models)
     chunks = _chunk_files(input_path, n_chunks, input_format)
 
     summary = {"chunks_total": len(chunks), "chunks_skipped": 0,
@@ -217,60 +216,66 @@ def run_filter_job(
                     f"assignment {len(files)}). Resume with the original "
                     f"input + n_chunks, or start a fresh output dir.")
 
-    for k, files in enumerate(chunks):
-        if os.path.exists(_done_path(ckpt_dir, k)):
-            summary["chunks_skipped"] += 1
-            continue
-        if input_format == "parquet":
-            df = spark.read.parquet(*files)
-        elif input_format == "jsonl":
-            from datacanary_spark.sources.io import read_pages_jsonl
+    models_bc = broadcast_models(spark, models)
+    try:
+        for k, files in enumerate(chunks):
+            if os.path.exists(_done_path(ckpt_dir, k)):
+                summary["chunks_skipped"] += 1
+                continue
+            if input_format == "parquet":
+                df = spark.read.parquet(*files)
+            elif input_format == "jsonl":
+                from datacanary_spark.sources.io import read_pages_jsonl
 
-            df = read_pages_jsonl(spark, files)
-        else:
-            from datacanary_spark.plans.pipeline import pages_from_warc
+                df = read_pages_jsonl(spark, files)
+            else:
+                from datacanary_spark.plans.pipeline import pages_from_warc
 
-            kinds = ("conversion",) if input_format == "wet" \
-                else ("response",)
-            df = pages_from_warc(spark, files, record_types=kinds,
-                                 ok_only=http_ok_only)
-        verdicts = filter_pages(df, models_bc, cfg,
-                                extract_from_html=extract_from_html,
-                                repartition_buckets=repartition_buckets,
-                                extractor=extractor,
-                                structure_rules=structure_rules)
-        chunk_out = os.path.join(data_dir, f"chunk={k}")
-        verdicts.write.mode("overwrite").parquet(chunk_out)
+                kinds = ("conversion",) if input_format == "wet" \
+                    else ("response",)
+                df = pages_from_warc(spark, files, record_types=kinds,
+                                     ok_only=http_ok_only)
+            verdicts = filter_pages(df, models_bc, cfg,
+                                    extract_from_html=extract_from_html,
+                                    repartition_buckets=repartition_buckets,
+                                    extractor=extractor,
+                                    structure_rules=structure_rules)
+            chunk_out = os.path.join(data_dir, f"chunk={k}")
+            verdicts.write.mode("overwrite").parquet(chunk_out)
 
-        # lineage from the written output (no recompute of the pipeline);
-        # keyed by the materialized url-hash bucket column, stable across
-        # the re-read. Written as a dynamic overwrite of the chunk=k
-        # partition: a crash between this write and the _done marker
-        # replays the chunk on resume, and the overwrite absorbs the
-        # replay instead of appending duplicate metrics rows.
-        written = spark.read.parquet(chunk_out)
-        lin = partition_lineage(written, cfg,
-                                structure_rules=structure_rules) \
-            .withColumn("chunk", F.lit(k))
-        (lin.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("chunk").parquet(metrics_dir))
-        # Chunk totals from the just-written lineage rows (one tiny row
-        # per bucket) — NOT a second full scan of the chunk data, which
-        # would double per-chunk read I/O at scale for numbers the
-        # lineage aggregate already computed.
-        chunk_metrics = os.path.join(metrics_dir, f"chunk={k}")
-        if os.path.isdir(chunk_metrics):
-            counts = (spark.read.parquet(chunk_metrics)
-                      .agg(F.sum("input_count").alias("n"),
-                           F.sum("keep_count").alias("kept")).collect()[0])
-        else:  # empty chunk: dynamic overwrite wrote no partition dir
-            counts = {"n": 0, "kept": 0}
+            # lineage from the written output (no recompute of the pipeline);
+            # keyed by the materialized url-hash bucket column, stable across
+            # the re-read. Written as a dynamic overwrite of the chunk=k
+            # partition: a crash between this write and the _done marker
+            # replays the chunk on resume, and the overwrite absorbs the
+            # replay instead of appending duplicate metrics rows.
+            written = spark.read.parquet(chunk_out)
+            lin = partition_lineage(written, cfg,
+                                    structure_rules=structure_rules) \
+                .withColumn("chunk", F.lit(k))
+            (lin.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("chunk").parquet(metrics_dir))
+            # Chunk totals from the just-written lineage rows (one tiny row
+            # per bucket) — NOT a second full scan of the chunk data, which
+            # would double per-chunk read I/O at scale for numbers the
+            # lineage aggregate already computed.
+            chunk_metrics = os.path.join(metrics_dir, f"chunk={k}")
+            if os.path.isdir(chunk_metrics):
+                counts = (spark.read.parquet(chunk_metrics)
+                          .agg(F.sum("input_count").alias("n"),
+                               F.sum("keep_count").alias("kept")).collect()[0])
+            else:  # empty chunk: dynamic overwrite wrote no partition dir
+                counts = {"n": 0, "kept": 0}
 
-        _mark_done(ckpt_dir, k, {"chunk": k, "files": files,
-                                 "docs": int(counts["n"] or 0),
-                                 "kept": int(counts["kept"] or 0)})
-        summary["chunks_run"] += 1
+            _mark_done(ckpt_dir, k, {"chunk": k, "files": files,
+                                     "docs": int(counts["n"] or 0),
+                                     "kept": int(counts["kept"] or 0)})
+            summary["chunks_run"] += 1
+    finally:
+        # the model bundle is a multi-MB broadcast per call; release it
+        # once the last chunk is written
+        models_bc.destroy()
 
     # totals from checkpoint markers (covers resumed runs too)
     for k in range(len(chunks)):

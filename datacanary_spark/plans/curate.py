@@ -20,6 +20,10 @@ The full training-data pipeline composed from the engine's tiers:
 Every stage is one of the already-tested operators; this module only
 composes them and accounts for what each stage removed (the per-stage
 counts are the corpus-level lineage a 100-TB curation run reports).
+No Spark job is spent on that accounting when stages are checkpointed:
+each count is an observation that the stage's own pin job reports
+(``_StageCounts``), and ``final_docs`` — which the sample counts equal
+— is the sum of the ``by_lang`` table.
 Determinism: every stage is a pure function of content (hashes, min-id
 survivors, hash-threshold sampling), so re-running the job on the same
 input reproduces the identical corpus on any cluster size.
@@ -30,8 +34,9 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datacanary_spark.functions.heuristics import FilterConfig
@@ -62,6 +67,93 @@ STAGE_COUNT_ORDER = (
     "after_span_dedup", "after_host_cap", "after_decontamination",
     "after_dsir", "sampled", "upsampled_rows",
 )
+
+
+def curate_front(verdicts: DataFrame, extra: list[str] = ()) -> DataFrame:
+    """Curate's kept frame: url, scrubbed text as ``text``, ``extra``.
+
+    An observation sits BEFORE the ``keep`` filter as an optimizer
+    barrier: Catalyst does not push a predicate through
+    ``CollectMetrics``. Without it Catalyst pushes ``keep`` down
+    through ``filter_pages``' staged projects, inlining every heuristic
+    stat into a non-codegen Filter (which rebuilds ``split(text)`` per
+    consumer) and splitting the UDFs over two Python boundaries:
+    perplexity + langid over every doc, then scrub + langid again over
+    the kept ones. With it the front is the staged projects, ONE
+    ArrowEvalPython evaluating langid, perplexity and scrub once each,
+    then a codegen'd ``keep`` filter.
+    """
+    return (verdicts.observe(f"curate_front_{uuid.uuid4().hex}",
+                             F.count_if("keep").alias("kept"))
+            .where(F.col("keep"))
+            .select("url", F.col("scrubbed_text").alias("text"), *extra))
+
+
+class _StageCounts:
+    """Stage pins plus the doc counts curate's lineage records.
+
+    ``checkpoint``: a count is a named ``DataFrame.observe`` on the
+    frame, read from the QueryExecution of the eager
+    ``localCheckpoint`` that runs it — no Spark job is spent on
+    counting. ``persist`` is lazy, so a pin keeps its one ``count()``
+    (the action that materializes it), and an unpinned frame is
+    counted by an action too. Named observations, not ``Observation``
+    objects: in Spark 4.1 an ``Observation`` makes the session's
+    ObservationManager part of the serialized SparkSession, so a later
+    MLlib model whose training summary holds the session can no longer
+    be shipped to executors.
+    """
+
+    def __init__(self, scope: CacheScope, checkpoint: bool):
+        self._scope, self.checkpoint = scope, checkpoint
+        self._taken: dict[str, int] = {}
+        # key -> (metric name, frame to count if no pin job reported it)
+        self._pending: dict[str, tuple[str, DataFrame]] = {}
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        if not self.checkpoint:
+            return self._scope.persist(df)
+        out = self._scope.checkpoint(df)
+        metrics = df._jdf.queryExecution().observedMetrics()
+        for key, (name, _) in list(self._pending.items()):
+            row = metrics.get(name)
+            if row.isDefined():
+                self._taken[key] = row.get().getLong(0)
+                del self._pending[key]
+        return out
+
+    def count(self, key: str, df: DataFrame,
+              where: Column | None = None) -> DataFrame:
+        """Count ``df``'s rows (matching ``where``) under ``key``:
+        observed in checkpoint mode, where the next pin's job reports
+        it; one ``count()`` in persist mode."""
+        if not self.checkpoint:
+            self._taken[key] = (df if where is None
+                                else df.where(where)).count()
+            return df
+        name = f"{key}_{uuid.uuid4().hex}"
+        self._pending[key] = (name, df if where is None else df.where(where))
+        n = F.count(F.lit(1)) if where is None else F.count_if(where)
+        return df.observe(name, n)
+
+    def pin_count(self, key: str, df: DataFrame,
+                  where: Column | None = None) -> DataFrame:
+        """Pin ``df`` and count its rows (matching ``where``) under ``key``."""
+        if self.checkpoint:
+            return self.pin(self.count(key, df, where))
+        df = self.pin(df)
+        self.count(key, df, where)
+        return df
+
+    def resolve(self) -> dict[str, int]:
+        """Every count; call after the last pin. The optimizer drops a
+        CollectMetrics under a provably empty ancestor (e.g. a URL
+        pattern that matches everything), so its pin reports nothing:
+        only those frames are counted with a job."""
+        for key, (_, df) in self._pending.items():
+            self._taken[key] = df.count()
+        self._pending.clear()
+        return self._taken
 
 
 def run_curation_job(
@@ -265,12 +357,10 @@ def run_curation_job(
         decontaminate_path is not None, dsir_target_path is not None,
         bool(fractions) or temperature is not None
         or bool(epoch_weights)) if on)
-    if stage_pin == "checkpoint" or (stage_pin == "auto" and n_stages >= 6):
-        pin = scope.checkpoint
-    else:
-        pin = scope.persist
-    blocklist_count = None
-    normalize_count = None
+    counts = _StageCounts(scope, stage_pin == "checkpoint"
+                          or (stage_pin == "auto" and n_stages >= 6))
+    pin, pin_count = counts.pin, counts.pin_count
+    models_bc = None
     try:
         if input_format == "parquet":
             pages = read_table(spark, input_path)
@@ -308,6 +398,8 @@ def run_curation_job(
         else:
             raise ValueError(f"unknown input_format {input_format!r} "
                              f"(expected parquet, jsonl, warc, or wet)")
+        # docs_in is the input before any URL-level stage drops a doc
+        pages = counts.count("docs_in", pages)
         if blocklist is not None:
             from datacanary_spark.operators.text_analysis import (
                 filter_blocked_domains,
@@ -320,16 +412,12 @@ def run_curation_job(
             # list is inlined (literal dispatch under 256 entries).
             bl = (read_table(spark, blocklist)
                   if isinstance(blocklist, str) else list(blocklist))
-            n_in = pages.count()
-            # pin the filtered frame: three downstream consumers read it
-            # (the after_blocklist count, the filter stage, docs_in via
-            # the summary) — unpersisted, each re-runs the blocklist
-            # explode/semi-join over the full input
-            pages = pin(
+            # pinned: its count and the filter stage both read it —
+            # unpinned, each re-runs the blocklist explode/semi-join
+            pages = pin_count(
+                "after_blocklist",
                 filter_blocked_domains(pages, bl, url_col="url",
                                        id_col="url"))
-            blocklist_count = {"docs_in": n_in,
-                               "after_blocklist": pages.count()}
         if block_url_patterns:
             from datacanary_spark.operators.text_analysis import (
                 filter_blocked_url_patterns,
@@ -338,12 +426,11 @@ def run_curation_job(
             # same run-FIRST rationale as the domain blocklist, and
             # even cheaper: a pure column predicate on url, no join —
             # pipelines into whatever scan/filter runs next, so no
-            # persist or extra count-triggered pass is warranted
-            if blocklist_count is None:
-                blocklist_count = {"docs_in": pages.count()}
-            pages = filter_blocked_url_patterns(pages, block_url_patterns,
-                                                url_col="url")
-            blocklist_count["after_url_patterns"] = pages.count()
+            # pin is warranted; the filter stage's pin fills its counts
+            pages = counts.count(
+                "after_url_patterns",
+                filter_blocked_url_patterns(pages, block_url_patterns,
+                                            url_col="url"))
         if robots_table is not None:
             from datacanary_spark.operators.robots import robots_filter
 
@@ -353,23 +440,22 @@ def run_curation_job(
             # compiled rules broadcast; the per-page longest-match is
             # expression-only and pipelines with the scan. Docs with no
             # parseable host or no robots row pass (policy can't apply).
-            if blocklist_count is None:
-                blocklist_count = {"docs_in": pages.count()}
-            pages = robots_filter(pages, read_table(spark, robots_table),
-                                  agent=robots_agent, url_col="url")
-            blocklist_count["after_robots"] = pages.count()
+            pages = counts.count(
+                "after_robots",
+                robots_filter(pages, read_table(spark, robots_table),
+                              agent=robots_agent, url_col="url"))
         if normalize_unicode or fix_encoding:
             from datacanary_spark.functions.normalize import normalize_text
 
-            # persisted: the changed-count lineage aggregate and the
-            # filter stage both consume the UDF output — unpersisted,
+            # pinned: the changed-count lineage aggregate and the
+            # filter stage both consume the UDF output — unpinned,
             # the normalizer would run twice over the full corpus
-            pages = pin(normalize_text(
+            pages = pin_count("normalized_docs", normalize_text(
                 pages, "text", form=normalize_unicode,
-                fix_encoding=fix_encoding))
-            normalize_count = pages.where(F.col("text_changed")).count()
+                fix_encoding=fix_encoding), where=F.col("text_changed"))
             pages = pages.drop("text_changed")
-        verdicts = filter_pages(pages, broadcast_models(spark, models), cfg,
+        models_bc = broadcast_models(spark, models)
+        verdicts = filter_pages(pages, models_bc, cfg,
                                 extract_from_html=extract_from_html,
                                 extractor=extractor)
         # carry exactly the columns downstream stages key on: url + scrubbed
@@ -384,23 +470,12 @@ def run_curation_job(
                     f"column {c!r} not in the filter output "
                     f"(available: {sorted(verdicts.columns)})")
             carry.append(c)
-        kept = pin(
-            verdicts.where(F.col("keep"))
-                    .select("url", F.col("scrubbed_text").alias("text"),
-                            *carry[2:]))
-        # docs_in means the PRE-blocklist input; with a blocklist active
-        # the counts were already taken (no extra action — counting the
-        # filtered frame here would re-scan and then be overwritten)
-        summary = dict(blocklist_count) if blocklist_count is not None \
-            else {"docs_in": pages.count()}
+        kept = pin_count("kept", curate_front(verdicts, carry[2:]))
         # which pin actually ran — operators need to know whether this
         # run had lineage recovery (persist) or restart-level retry
         # only (checkpoint); deterministic, so re-run summaries match
-        summary["stage_pin"] = ("checkpoint"
-                                if pin == scope.checkpoint else "persist")
-        if normalize_count is not None:
-            summary["normalized_docs"] = normalize_count
-        summary["kept"] = kept.count()
+        summary = {"stage_pin": ("checkpoint" if counts.checkpoint
+                                 else "persist")}
 
         if classifier_model:
             from datacanary_spark.plans.classifier import (
@@ -414,17 +489,15 @@ def run_curation_job(
                 # DCLM-style: keep the top fraction by score rather
                 # than a fixed probability threshold — robust to score
                 # calibration drift across corpora
-                kept = pin(
-                    classify_top_fraction(
-                        kept, clf, classifier_keep_fraction,
-                        text_col="text", tie_col="url", persist=scope)
-                    .select(*kept.columns))
+                scored = classify_top_fraction(
+                    kept, clf, classifier_keep_fraction,
+                    text_col="text", tie_col="url", persist=scope)
             else:
-                kept = pin(
-                    classify(kept, clf, text_col="text",
-                             threshold=classifier_threshold)
-                    .where(F.col("keep_pred")).select(*kept.columns))
-            summary["after_classifier"] = kept.count()
+                scored = classify(kept, clf, text_col="text",
+                                  threshold=classifier_threshold) \
+                    .where(F.col("keep_pred"))
+            kept = pin_count("after_classifier",
+                             scored.select(*kept.columns))
 
         if gopher_repetition:
             from datacanary_spark.functions.repetition import (
@@ -437,9 +510,8 @@ def run_curation_job(
             rep = with_repetition_stats(kept, text_col="text")
             hits = gopher_repetition_hit_exprs(rcfg)
             n_hits = sum(hits.values(), F.lit(0))
-            kept = pin(
-                rep.where(n_hits == 0).select(*kept.columns))
-            summary["after_repetition_filter"] = kept.count()
+            kept = pin_count("after_repetition_filter",
+                             rep.where(n_hits == 0).select(*kept.columns))
 
         if max_code_line_fraction is not None:
             from datacanary_spark.functions.readability import (
@@ -454,11 +526,10 @@ def run_curation_job(
             # explicit null guard: ~(NULL > t) is NULL and where()
             # drops NULL rows — the opposite of the survive contract
             frac = F.col("rd_code_line_fraction")
-            kept = pin(
-                rd.where(frac.isNull()
-                         | (frac <= max_code_line_fraction))
+            kept = pin_count(
+                "after_code_filter",
+                rd.where(frac.isNull() | (frac <= max_code_line_fraction))
                   .select(*kept.columns))
-            summary["after_code_filter"] = kept.count()
 
         if min_compression_ratio is not None:
             from datacanary_spark.functions.readability import (
@@ -473,12 +544,12 @@ def run_curation_job(
             ratio = make_compression_ratio_udf()(F.col("text"))
             # same null guard as the code filter: null ratio (empty
             # text) must survive, and NULL comparisons drop in where()
-            kept = pin(
+            kept = pin_count(
+                "after_compression_filter",
                 kept.withColumn("_zratio", ratio)
                     .where(F.col("_zratio").isNull()
                            | (F.col("_zratio") >= min_compression_ratio))
                     .select(*kept.columns))
-            summary["after_compression_filter"] = kept.count()
 
         if badwords is not None:
             from datacanary_spark.operators.text_analysis import (
@@ -497,12 +568,11 @@ def run_curation_job(
             # from the scrub lexicon (they serve different policies).
             bw = (read_table(spark, badwords)
                   if isinstance(badwords, str) else list(badwords))
-            kept = pin(filter_badwords(
+            kept = pin_count("after_badwords", filter_badwords(
                 kept, bw, text_col="text", id_col="url",
                 max_hits=(None if badword_max_fraction is not None
                           else 0),
                 max_fraction=badword_max_fraction))
-            summary["after_badwords"] = kept.count()
 
         if c4_clean:
             from datacanary_spark.operators.text_analysis import (
@@ -512,14 +582,13 @@ def run_curation_job(
             # line-QUALITY cleaning before any dedup: boilerplate lines
             # removed here never enter a fingerprint or shingle set, so
             # every later stage hashes less text
-            kept = pin(c4_clean_op(
+            kept = pin_count("after_c4_clean", c4_clean_op(
                 kept, text_col="text",
                 min_words=c4_min_line_words,
                 require_terminal=c4_require_terminal))
-            summary["after_c4_clean"] = kept.count()
 
-        stage = pin(dedup_exact(kept, id_col="url", text_col="text"))
-        summary["after_exact_dedup"] = stage.count()
+        stage = pin_count("after_exact_dedup",
+                          dedup_exact(kept, id_col="url", text_col="text"))
 
         if near_dup_threshold is not None:
             from datacanary_spark.operators.dedup import near_dup_pairs
@@ -543,16 +612,17 @@ def run_curation_job(
                 flagged = cluster_survivors(
                     stage, pairs.select("id_a", "id_b"), id_col="url",
                     rank_col=F.length("text"), persist=scope)
-                stage = pin(
+                stage = pin_count(
+                    "after_near_dup_clusters",
                     flagged.where(F.col("is_survivor"))
                            .drop("component", "is_survivor"))
             else:
                 assigned = components_of_pairs(
                     stage, pairs.select("id_a", "id_b"), id_col="url")
-                stage = pin(
+                stage = pin_count(
+                    "after_near_dup_clusters",
                     assigned.where(F.col("component") == F.col("url"))
                             .drop("component"))
-            summary["after_near_dup_clusters"] = stage.count()
 
         if line_dedup:
             # (unit validated up front, incl. the c4_clean conflict)
@@ -563,9 +633,10 @@ def run_curation_job(
                              persist=scope,
                              sep=("\n\n" if line_dedup_unit == "paragraph"
                                   else "\n"))
-            stage = pin(stage.drop("text").join(ld, "url")
-                                  .where(F.length(F.trim("text")) > 0))
-            summary["after_line_dedup"] = stage.count()
+            stage = pin_count(
+                "after_line_dedup",
+                stage.drop("text").join(ld, "url")
+                     .where(F.length(F.trim("text")) > 0))
 
         if span_dedup_k is not None:
             from datacanary_spark.operators.dedup import remove_repeated_ngrams
@@ -574,9 +645,10 @@ def run_curation_job(
                                         text_col="text", k=span_dedup_k,
                                         min_count=span_min_count,
                                         hash_fn="xxhash64", persist=scope)
-            stage = pin(stage.drop("text").join(sd, "url")
-                                  .where(F.length(F.trim("text")) > 0))
-            summary["after_span_dedup"] = stage.count()
+            stage = pin_count(
+                "after_span_dedup",
+                stage.drop("text").join(sd, "url")
+                     .where(F.length(F.trim("text")) > 0))
 
         if host_cap is not None:
             from datacanary_spark.operators.corpus_stats import cap_per_group
@@ -597,8 +669,7 @@ def run_curation_job(
             capped = cap_per_group(
                 stage.withColumn("_host", blocklist_host_expr(F.col("url"))),
                 "_host", host_cap, "url", exempt_null_group=True).drop("_host")
-            stage = pin(capped)
-            summary["after_host_cap"] = stage.count()
+            stage = pin_count("after_host_cap", capped)
 
         if decontaminate_path:
             reference = read_table(spark, decontaminate_path)
@@ -611,9 +682,8 @@ def run_curation_job(
                     decontaminate_bloom,
                 )
 
-                stage = pin(
-                    decontaminate_bloom(stage, reference, text_col="text",
-                                        persist=scope))
+                stage = decontaminate_bloom(stage, reference, text_col="text",
+                                            persist=scope)
             elif decontaminate_mode == "minhash":
                 # fuzzy tier: drops docs NEAR-duplicate to a reference
                 # item (reflowed/lightly-edited benchmark copies that
@@ -626,9 +696,8 @@ def run_curation_job(
                 # the band explode and the verify join — unpersisted,
                 # the shingle+16-hash signature pass (the mode's
                 # dominant map cost) runs twice over the full corpus
-                stage = pin(
-                    decontaminate_minhash(stage, reference, id_col="url",
-                                          text_col="text", persist=scope))
+                stage = decontaminate_minhash(stage, reference, id_col="url",
+                                              text_col="text", persist=scope)
             elif decontaminate_mode == "ngrams":
                 # exhaustive word-n-gram overlap (GPT-3 13-gram rule):
                 # any shared 13-gram with the reference contaminates
@@ -636,26 +705,24 @@ def run_curation_job(
                     decontaminate_ngrams,
                 )
 
-                stage = pin(
-                    decontaminate_ngrams(stage, reference, id_col="url",
-                                         text_col="text"))
+                stage = decontaminate_ngrams(stage, reference, id_col="url",
+                                             text_col="text")
             else:
-                stage = pin(
-                    decontaminate(stage, reference, id_col="url",
-                                  text_col="text", mode=decontaminate_mode))
-            summary["after_decontamination"] = stage.count()
+                stage = decontaminate(stage, reference, id_col="url",
+                                      text_col="text", mode=decontaminate_mode)
+            stage = pin_count("after_decontamination", stage)
 
         if dsir_target_path:
             from datacanary_spark.operators import dsir
 
             target = read_table(spark, dsir_target_path)
             model = dsir.train_dsir(target, stage, text_col="text")
-            stage = pin(
+            stage = pin_count(
+                "after_dsir",
                 dsir.dsir_select(stage, model, dsir_keep_fraction,
                                  text_col="text", tie_col="url",
                                  persist=scope)
                     .drop("dsir_weight"))
-            summary["after_dsir"] = stage.count()
 
         if temperature is not None:
             from datacanary_spark.operators.corpus_stats import (
@@ -668,8 +735,8 @@ def run_curation_job(
             summary["temperature_fractions"] = {
                 k: round(v, 6) for k, v in sorted(fractions.items())}
         if fractions:
-            stage = hash_stratified_sample(stage, strata_col, fractions, key_col)
-            summary["sampled"] = stage.count()
+            stage = hash_stratified_sample(stage, strata_col, fractions,
+                                           key_col)
 
         if epoch_weights:
             from datacanary_spark.operators.corpus_stats import epoch_upsample
@@ -679,26 +746,35 @@ def run_curation_job(
             # interleave replicas instead of emitting them back-to-back
             stage = epoch_upsample(stage, strata_col, epoch_weights, key_col)
             carry.append("epoch")
-            summary["upsampled_rows"] = stage.count()
 
         corpus_dir = os.path.join(output_path, "corpus")
         # pin the output schema: the line-dedup join reorders columns, and
         # positional consumers must see one layout regardless of flags
         stage.select(*carry).write.mode("overwrite").parquet(corpus_dir)
+        summary.update(counts.resolve())
+        # the sampled / upsampled frame is exactly what was written
+        written = ("upsampled_rows" if epoch_weights
+                   else "sampled" if fractions else None)
     finally:
-        # release every pinned stage even when a stage throws — a
-        # long-lived session must not accumulate cached blocks
+        # release every pinned stage and the model broadcast even when
+        # a stage throws — a long-lived session must not accumulate
+        # cached blocks or a multi-MB broadcast per call
         scope.unpersist_all()
+        if models_bc is not None:
+            models_bc.destroy()
 
     final = spark.read.parquet(corpus_dir)
-    summary["final_docs"] = final.count()
     summary["by_lang"] = {
         r[strata_col]: r["n"]
         for r in final.groupBy(strata_col)
                       .agg(F.count(F.lit(1)).alias("n")).collect()}
-    # per-stage accounting table, derived from the counts each stage
-    # already took (no extra Spark action): docs_in chains from the
-    # previous stage's docs_out, so sums are consistent by construction
+    # the groupBy counts every row, the null stratum included
+    summary["final_docs"] = sum(summary["by_lang"].values())
+    if written:
+        summary[written] = summary["final_docs"]
+    # per-stage accounting table, derived from the counts already taken
+    # (no extra Spark action): docs_in chains from the previous stage's
+    # docs_out, so sums are consistent by construction
     lineage = []
     prev = summary["docs_in"]
     for key in STAGE_COUNT_ORDER:

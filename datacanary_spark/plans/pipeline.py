@@ -15,8 +15,15 @@ Scale reasoning:
   lineage bucketing); everything upstream is narrow and pipelines with
   the scan in one stage.
 * Heuristics run BEFORE the model UDFs so Catalyst keeps them in the
-  scan stage's codegen span; the three Python boundaries are fused by
-  Spark into batched Arrow exchanges.
+  scan stage's codegen span, and Spark fuses the three UDFs (langid,
+  perplexity, scrub) into ONE ArrowEvalPython boundary — but only while
+  no predicate is pushed into this plan. A consumer's ``where(keep)``
+  is pushed down past the ``keep`` projection: the stats get inlined
+  into a non-codegen Filter and the UDFs split over two boundaries
+  (langid evaluated twice). Consumers that filter on the verdict put a
+  ``DataFrame.observe`` between it and the filter — Catalyst does not
+  push predicates through ``CollectMetrics`` — as
+  ``plans.curate.curate_front`` does.
 * Models are broadcast once (a few MB) and cached per worker process
   (functions/udfs.py) — zero per-batch deserialization.
 * Skewed hosts don't matter here (no per-host shuffle in the verdict

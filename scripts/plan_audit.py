@@ -8,7 +8,11 @@ whole-stage-codegen spans. Queries DESIGNED to contain a nested-loop
 stage (the exact all-pairs oracle twins) are annotated rather than
 flagged. Every lambda body of the optimized plan is also checked for
 captured subtrees (``plans.lambda_capture``): loop-invariant column
-work that a higher-order function re-runs per array element.
+work that a higher-order function re-runs per array element. A Python
+UDF that more than one ArrowEvalPython/BatchEvalPython node evaluates
+is flagged too: each extra node ships the rows to Python again (the
+optimizer splits one boundary in two when it pushes a filter between
+UDF projections).
 
 Writes PLAN_AUDIT.md. Usage:
     python scripts/plan_audit.py [sf_dir]
@@ -45,6 +49,28 @@ EXPECTED_SCALAR_BNLJ = {"temperature_mix_by_lang",
                         "ccnet_ppl_buckets_by_lang"}
 
 
+def python_udf_nodes(plan: str) -> dict[str, int]:
+    """UDF name -> number of ArrowEvalPython/BatchEvalPython nodes that
+    evaluate it, from the nodes' top-level ``[udf(args)#id, ...]``
+    lists (arguments may nest calls, so only depth-0 names count)."""
+    nodes: dict[str, int] = {}
+    for m in re.finditer(r"(?:Arrow|Batch)EvalPython \[", plan):
+        depth, name, names = 0, "", set()
+        for ch in plan[m.end():]:
+            if depth == 0 and ch == "]":
+                break
+            if ch == "(":
+                if depth == 0:
+                    names.add(name)
+                depth += 1
+            elif ch == ")":
+                depth -= 1
+            name = name + ch if ch.isalnum() or ch == "_" else ""
+        for n in names:
+            nodes[n] = nodes.get(n, 0) + 1
+    return nodes
+
+
 def audit(name: str, plan: str) -> dict:
     # Count over UNIQUE normalized plan lines: a persisted frame's
     # InMemoryRelation reprints its cached child plan (same expression
@@ -72,6 +98,8 @@ def audit(name: str, plan: str) -> dict:
         + plan.count("BatchEvalPython")
         + plan.count("FlatMapGroupsInPandas")
         + plan.count("AggregateInPandas"),
+        "udf_repeats": {u: n for u, n in python_udf_nodes(plan).items()
+                        if n > 1},
         # true iff ANY scan carries a non-empty pushed-filter list (a
         # whole-plan regex would report '—' when one joined side has
         # an empty list even though the other side pushes fine)
@@ -95,6 +123,8 @@ def main() -> None:
         a["captures"] = lambda_captures(df, "optimized")
         rows.append(a)
         flags += [f"{name}: lambda captures {c}" for c in a["captures"]]
+        flags += [f"{name}: Python UDF {u} evaluated by {n} nodes"
+                  for u, n in sorted(a["udf_repeats"].items())]
         if a["cartesian"]:
             flags.append(f"{name}: CartesianProduct")
         if a["bnlj"] and name not in EXPECTED_BNLJ | EXPECTED_SCALAR_BNLJ:
@@ -143,8 +173,9 @@ def main() -> None:
                      "the PQ compressed-scan) plus the single-row "
                      "scalar-broadcast cross join (global min attached "
                      "to per-group rows); Python evaluation appears "
-                     "only in the pandas-UDF operators (MAD UDAF); no "
-                     "lambda body captures a column subtree.")
+                     "only in the pandas-UDF operators (MAD UDAF), "
+                     "each UDF in one evaluation node; no lambda body "
+                     "captures a column subtree.")
     with open("PLAN_AUDIT.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"{len(rows)} queries audited; {len(flags)} flags")

@@ -466,6 +466,45 @@ def test_curate_end_to_end_and_deterministic(spark, tmp_path, capsys):
     assert a == b
 
 
+def test_curate_pin_modes_agree(spark, tmp_path):
+    """persist and checkpoint pins yield the same summary and corpus.
+    Checkpoint reads its stage counts from the observations its pin
+    jobs report; persist counts with actions. Neither leaves the session
+    unable to ship an MLlib model that holds it (a Spark 4.1
+    ``Observation`` would)."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+
+    from datacanary_spark.plans.curate import run_curation_job
+    from datacanary_spark.sources.fixtures import write_pages_parquet
+
+    pages = str(tmp_path / "pages")
+    write_pages_parquet(pages, n_docs=150, seed=3)
+    kw = dict(blocklist=["host1.example.com"],
+              block_url_patterns=[r"/page/\d*7$"], host_cap=8,
+              fractions={"en": 1.0, "de": 0.5, "fr": 0.5, "es": 0.5})
+    runs = {}
+    for mode in ("persist", "checkpoint"):
+        out = str(tmp_path / mode)
+        s = run_curation_job(spark, pages, out, stage_pin=mode, **kw)
+        assert s.pop("stage_pin") == mode
+        s.pop("wall_sec")
+        rows = spark.read.parquet(os.path.join(out, "corpus")).collect()
+        runs[mode] = (s, sorted(tuple(r) for r in rows))
+    s, corpus = runs["checkpoint"]
+    assert runs["persist"] == (s, corpus)
+    assert (s["docs_in"] > s["after_blocklist"] > s["after_url_patterns"]
+            >= s["kept"] >= s["after_exact_dedup"] >= s["after_line_dedup"]
+            > s["after_host_cap"] >= s["sampled"] == s["final_docs"]
+            == len(corpus) > 0)
+    d = VectorAssembler(inputCols=["x"], outputCol="features").transform(
+        spark.range(20).select((F.col("id") % 2).cast("double")
+                               .alias("label"),
+                               (F.col("id") % 5).cast("double").alias("x")))
+    model = LogisticRegression(maxIter=3).fit(d)
+    assert len(model.transform(d).select("probability").collect()) == 20
+
+
 def test_spark_submit_curate_job(tmp_path):
     """jobs/curate_job.py runs through spark-submit in a fresh JVM with
     only the --py-files zip (the packaged composition entry point)."""

@@ -276,3 +276,47 @@ def test_minhash_shingles_once_after_the_spread(spark, monkeypatch,
                  if "regexp_replace" in ln or "lambdafunction" in ln]
         assert not below, "shingle work below the spread:\n" + \
             "\n".join(below)
+
+
+def _physical_nodes(df):
+    """Every node of ``df``'s physical plan (AQE's input plan)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    stack = [plan.inputPlan() if plan.nodeName() == "AdaptiveSparkPlan"
+             else plan]
+    while stack:
+        node = stack.pop()
+        yield node
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+
+
+def test_curate_front_is_one_python_pass(spark):
+    """Curate's kept frame crosses the Python boundary once: a single
+    ArrowEvalPython evaluates langid, perplexity and scrub once each,
+    and the keep filter stays above it instead of being pushed into
+    the stat projects, where it rebuilt the word arrays (split(text))
+    in a non-codegen Filter and split the UDFs over two boundaries."""
+    from pyspark.sql import functions as F
+
+    from datacanary_spark.plans.curate import curate_front
+    from datacanary_spark.plans.pipeline import broadcast_models, filter_pages
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    pages = docs.select(
+        F.concat(F.lit("https://example.com/doc/"),
+                 F.col("doc_id").cast("string")).alias("url"),
+        F.col("text"), F.col("lang"))
+    bc = broadcast_models(spark)
+    try:
+        kept = curate_front(filter_pages(pages, bc), ["lang_pred"])
+        plan = _executed(kept)
+        nodes = list(_physical_nodes(kept))
+    finally:
+        bc.destroy()
+    assert [n.nodeName() for n in nodes].count("ArrowEvalPython") == 1
+    for udf in ("langid(", "perplexity(", "scrub("):
+        assert plan.count(udf) == 1, (udf, plan)
+    conditions = [n.condition().toString() for n in nodes
+                  if n.nodeName() == "Filter"]
+    assert conditions, "the keep filter is missing"
+    assert not [c for c in conditions if "split(" in c], conditions
